@@ -94,7 +94,7 @@ FROM scrubbed
 # '<EMAIL>'/'<PHONE>' introduce no '(' or '.' (a char in layer-N input
 # was either in the raw text or came from an earlier replacement).
 # Measured 8.43 s → 2.60 s at sf1.0 volume, checksum-identical
-# (tools/profile_r6b.py).
+# (OPTIMIZATION_r06.md).
 def _pii_guarded_scrub() -> F.Column:
     def layer(inner: F.Column, guard: str, pat: str, repl: str) -> F.Column:
         return F.when(F.instr("text", guard) == 0, inner).otherwise(

@@ -821,11 +821,7 @@ def q_tile_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(V.quantize_expr("embedding")).alias("dim", "qv"),
     )
     n_emb = emb.count()  # JVM-only count of the embedding side
-    qd_side = (
-        F.broadcast(qd)
-        if n_emb * 64 <= EMB_BROADCAST_MAX_ROWS * 64 and n_emb <= EMB_BROADCAST_MAX_ROWS
-        else qd
-    )
+    qd_side = F.broadcast(qd) if n_emb <= EMB_BROADCAST_MAX_ROWS else qd
     return (
         pt.join(qd_side, pt.doc_id == qd.vec_id)
         .groupBy("tile_id", "dim")
@@ -2078,7 +2074,7 @@ def q_zrange_bbox_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # running it FIRST shrinks the lineage cut + 16-term Morton + IN-list
     # machinery to the bbox survivors (~25% of pages here). Measured
     # 2.69 s → 0.56 s at sf1.0 volume, identical count
-    # (tools/profile_r6b.py). On a real zkey-laid-out table the order
+    # (OPTIMIZATION_r06.md). On a real zkey-laid-out table the order
     # inverts back for free: the z-ranges become pushed scan filters on
     # the layout column (what zorder_layout emits) and prune row groups
     # before any exact test runs — this per-row spelling is only the

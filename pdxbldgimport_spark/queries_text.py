@@ -110,7 +110,7 @@ def _h60_sql(md5_expr: str, strpos_fn: str, off: int = 0) -> str:
     polynomial IS ``conv(reverse(hex15), 16, 10)`` — reverse puts
     nibble 0 last, so conv's big-endian parse assigns it 16^0, exactly
     the polynomial. One string parse instead of 15×(instr+substr+mul)
-    — measured 3× cheaper per hash (r6, tools/profile_r6_h60.py: 0.57 s
+    — measured 3× cheaper per hash (r6, OPTIMIZATION_r06.md: 0.57 s
     vs 1.75 s marginal over 20M md5s, 0 mismatches at both offsets).
     The DuckDB spelling stays the frozen polynomial (oracle SQL text is
     fingerprinted; only values must match)."""

@@ -120,7 +120,7 @@ def canonical_url_expr(url_col) -> F.Column:
     URLs here never contain newlines (synth invariant, and the DuckDB
     oracle CTEs — which keep the regex spelling — gate equality on the
     actual data). Measured on 6M extracted hrefs: 1.71 → 1.28 s warm,
-    checksum-identical (tools/profile_r6e.py); old-vs-new equality on
+    checksum-identical (OPTIMIZATION_r06.md); old-vs-new equality on
     adversarial URLs pinned by tests/test_r6_guards.py."""
     url = F.col(url_col) if isinstance(url_col, str) else url_col
     auth_raw = F.regexp_extract(url, "^[A-Za-z]+://[^/?#]*", 0)

@@ -70,6 +70,43 @@ def _external_master() -> bool:
     return False
 
 
+# Share of the host's memory given to the driver heap, and its cap. The
+# rest is left to the Python driver, the Python workers and the page
+# cache; a fixed 16g default made the JVM die at start on a 15 GB host.
+HEAP_SHARE = 0.55
+HEAP_CAP_MB = 16 << 10
+
+
+def host_memory() -> tuple[int, int | None]:
+    """This host's MemTotal and its cgroup memory limit (``None`` when
+    unlimited), in bytes."""
+    with open("/proc/meminfo") as f:
+        total = next(int(line.split()[1]) << 10 for line in f
+                     if line.startswith("MemTotal:"))
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        # cgroup v2 writes "max", v1 a huge sentinel, for "no limit"
+        if raw.isdigit() and int(raw) < (1 << 60):
+            return total, int(raw)
+    return total, None
+
+
+def driver_mem(mem_total: int, cgroup_limit: int | None) -> str:
+    """The driver heap size: ``SPARK_DRIVER_MEM`` when set, else
+    HEAP_SHARE of the smaller of MemTotal and the cgroup limit, capped
+    at HEAP_CAP_MB."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    mem = min(mem_total, cgroup_limit) if cgroup_limit else mem_total
+    return f"{min(int(mem * HEAP_SHARE) >> 20, HEAP_CAP_MB)}m"
+
+
 def get_spark(
     app_name: str = "pdxbldgimport_spark",
     cores: int | None = None,
@@ -78,9 +115,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores=None`` → ``local[*]``. ``shuffle_partitions`` defaults to the
-    core count: on a real cluster this would instead be ~2-3× total cores
-    (AQE coalesces down, so erring high is safe at 100 TB scale).
+    ``cores=None`` → ``SPARK_GRAFT_CPUS``, else the CPU count.
+    ``shuffle_partitions`` defaults to the core count: on a real cluster
+    this would instead be ~2-3× total cores (AQE coalesces down, so
+    erring high is safe at 100 TB scale). The driver heap is
+    ``driver_mem`` of this host.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -92,6 +131,7 @@ def get_spark(
         envp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
         shuffle_partitions = int(envp) if envp else max(cores, 8)
 
+    heap = driver_mem(*host_memory())
     builder = SparkSession.builder
     # Respect an externally-configured master (spark-submit --master /
     # spark.master property): only default to local[N] when none is set,
@@ -108,15 +148,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         # Pin the heap: a growable 48g heap made G1 commit/uncommit tens of
         # GB across a run — observed as random multi-second stalls with the
         # CPUs idle. -Xms == -Xmx removes the churn.
         .config(
             "spark.driver.extraJavaOptions",
-            "-Djava.net.preferIPv4Stack=true -Xms"
-            + os.environ.get("SPARK_DRIVER_MEM", "16g"),
+            f"-Djava.net.preferIPv4Stack=true -Xms{heap}",
         )
     )
     for k, v in (extra_conf or {}).items():

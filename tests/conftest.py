@@ -1,8 +1,8 @@
 from __future__ import annotations
 
-import duckdb
 import pytest
 
+from pdxbldgimport_spark import oracle
 from pdxbldgimport_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -11,35 +11,22 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=8, extra_conf={"spark.sql.shuffle.partitions": "8"})
+    s = get_spark()
     yield s
     s.stop()
 
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    from pdxbldgimport_spark.synth import TABLES
-
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_ORACLE}/{t}.parquet')"
-        )
+    con = oracle.duck_views(SF_ORACLE)
     yield con
     con.close()
 
 
-def compare(spark_df, duck_con, sql: str, sort_cols=None):
-    """Order-insensitive exact comparison of a Spark result vs DuckDB."""
+def compare(spark_df, duck_con, sql: str):
+    """Order-insensitive exact comparison of a Spark result vs DuckDB;
+    returns the Spark result as pandas."""
     sp = spark_df.toPandas()
-    du = duck_con.sql(sql).df()
-    assert sorted(sp.columns) == sorted(du.columns), (sp.columns, du.columns)
-    cols = sort_cols or list(sp.columns)
-    sp = sp.sort_values(cols).reset_index(drop=True)[sorted(sp.columns)]
-    du = du.sort_values(cols).reset_index(drop=True)[sorted(du.columns)]
-    assert len(sp) == len(du), f"row count {len(sp)} != {len(du)}"
-    for c in sp.columns:
-        a = sp[c].fillna("«NULL»").astype(str).to_numpy()
-        b = du[c].fillna("«NULL»").astype(str).to_numpy()
-        bad = (a != b).nonzero()[0]
-        assert len(bad) == 0, f"col {c}: first mismatch row {bad[:5]}: {a[bad[:3]]} vs {b[bad[:3]]}"
+    msg = oracle.diff(sp, duck_con.sql(sql).df())
+    assert msg is None, msg
+    return sp

@@ -5,7 +5,7 @@ shuffle — at N and 4N EXECUTORS (the north rule's literal axis; the
 local[N] pairs in pairs_r5.jsonl scale threads inside one JVM).
 
 Usage:
-    python tools/cluster_pair.py check [query ...]   # correctness at 2 executors
+    python tools/cluster_pair.py check               # correctness at 2 executors
     python tools/cluster_pair.py bench <n_executors> # one headline leg, logged
     python tools/cluster_pair.py pair                # 2-exec + 8-exec legs
 
@@ -18,6 +18,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -82,39 +83,21 @@ def _submit(n_exec: int, script: str, argv: list[str], env_extra: dict,
     return subprocess.run(cmd, cwd=REPO, env=env, capture_output=True, text=True)
 
 
-# Representative multi-executor correctness set: the broadcast PIP
-# headline path, the salted/shuffle tile rollups, an Arrow pandas-UDF
-# codec family member, kNN's ring join, LSH dedup's banded buckets, and
-# a CC contraction — the shapes whose executor-side behavior (broadcast
-# replication, shuffle files between JVMs, Python worker shipping via
-# --py-files) local[N] threads cannot exercise.
-CHECK_DEFAULT = [
-    "pip_assign", "page_tile_counts", "tile_dissolve", "knn_unassigned",
-    "media_meta", "media_features", "dedup_minhash_lsh", "dedup_components",
-    "events_asof_join", "text_extract",
-]
-
-
-def check(names: list[str]) -> None:
-    if names == ["all"]:
-        sys.path.insert(0, REPO)
-        from pdxbldgimport_spark import registry as Q
-
-        names = list(Q.QUERIES)
-    names = names or CHECK_DEFAULT
-    sf = os.environ.get("CLUSTER_CHECK_SF", "/root/testdata/sf0.001")
-    out = _submit(
-        2, os.path.join(REPO, "tools", "oracle_check.py"),
-        [sf, *names], {},
-    )
-    tail = "\n".join(out.stdout.strip().splitlines()[-len(names) - 4:])
-    print(tail)
-    if out.returncode != 0 or "FAILS: 0" not in out.stdout:
+def check() -> None:
+    """The full registry vs its DuckDB oracles at sf0.01 and 2 executors,
+    through tools/evidence.py: broadcast replication, shuffle files
+    between JVMs and Python-worker shipping via --py-files, which
+    local[N] threads cannot exercise."""
+    with tempfile.TemporaryDirectory() as out_dir:
+        out = _submit(
+            2, os.path.join(REPO, "tools", "evidence.py"), ["--out", out_dir], {}
+        )
+    print("\n".join(out.stdout.strip().splitlines()[-5:]))
+    if out.returncode != 0:
         sys.stderr.write(out.stderr[-4000:])
         raise SystemExit(f"cluster check failed (rc={out.returncode})")
     log_line({"kind": "cluster_check", "executors": 2,
-              "cores_per_exec": CORES_PER_EXEC, "sf": sf,
-              "n_queries": len(names), "fails": 0, "queries": names})
+              "cores_per_exec": CORES_PER_EXEC, "fails": 0})
 
 
 def bench(n_exec: int) -> None:
@@ -173,7 +156,7 @@ def shuffle(n_exec: int) -> None:
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "pair"
     if mode == "check":
-        check(sys.argv[2:])
+        check()
     elif mode == "bench":
         bench(int(sys.argv[2]))
     elif mode == "shuffle":
