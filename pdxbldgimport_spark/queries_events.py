@@ -10,65 +10,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as Wnd
 
 from .queries import register, views
-from .session import session_token
+from .streaming.gate import gate, sentinel_dump
 
 SESSION_GAP_S = 600  # 10-minute inactivity splits a session
 
-# ----------------------------------------------------------------------
-# GATE-ONLY plumbing (not a production path): the two streamed gates
-# below need the events table on disk as parquet "arrival" files for
-# readStream. One dump per (session, sf_dir), shared by both gates and
-# by bench.py's streaming drain; the write is PARTITIONED (parallel
-# tasks, no coalesce(1) — nothing serializes through one task even at
-# gate scale). A single far-future sentinel row (fake user -1 / fake
-# event_type) rides in its own file: its arrival advances the event-time
-# watermark past every real session's last+gap AND every real window's
-# end, so availableNow's final no-data batch flushes all real output
-# while the sentinel's own state stays open and is filtered out. In
-# production the sources are the real ledger dumps and no sentinel is
-# needed — the watermark advances with ordinary arrivals.
+# GATE-ONLY plumbing (streaming/gate.py): the events dump shared by the
+# two streamed gates below and by bench.py's streaming drain. The
+# sentinel (fake user -1, fake event_type) lands far enough past the last
+# event to close every real session (last + gap) and window (end +
+# watermark).
 _SENTINEL_TYPE = "zz_watermark_sentinel"
 _SENTINEL_MARGIN_S = 4 * 3600  # > max(10*gap, window + watermark)
-_DUMP_CACHE: dict = {}
 
 
 def _events_dump(spark: SparkSession, sf_dir: str) -> str:
-    """Dump events (all columns both gates need) once per (session,
-    sf_dir); returns the src glob. Cleaned up at process exit."""
-    key = (session_token(spark), sf_dir)
-    hit = _DUMP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import atexit
-    import shutil
-    import tempfile
-
-    ev = spark.table("events").select(
-        "event_id",
-        F.col("ts").cast("timestamp_ntz").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
+    """The events table as streaming arrival files (+ sentinel); returns
+    the src glob."""
+    return sentinel_dump(
+        spark, sf_dir, "events", "ts",
+        {"event_id": 10**9, "user_id": -1, "event_type": _SENTINEL_TYPE,
+         "value": 0.0},
+        _SENTINEL_MARGIN_S,
     )
-    far = ev.agg(
-        F.max(F.unix_micros(F.col("ts").cast("timestamp")))
-    ).first()[0]
-    root = tempfile.mkdtemp(prefix="events_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    ev.write.parquet(f"{root}/data")
-    sentinel_us = int(far) + _SENTINEL_MARGIN_S * 1_000_000
-    spark.createDataFrame(
-        [(10**9, -1, _SENTINEL_TYPE, 0.0)],
-        "event_id long, user_id long, event_type string, value double",
-    ).select(
-        "event_id",
-        F.timestamp_micros(F.lit(sentinel_us)).cast("timestamp_ntz").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    ).write.parquet(f"{root}/sentinel")
-    _DUMP_CACHE[key] = f"{root}/*"
-    return _DUMP_CACHE[key]
 
 
 # Tumbling 1-hour windows per event_type: count + value sum in integer
@@ -153,36 +116,14 @@ def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # start order; the sentinel user is dropped.
 @register("events_sessions_streamed", _SESSIONS_ORACLE)
 def q_events_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark import StorageLevel
-    from pyspark.sql import types as T
-
     from .streaming import sessions as SS
 
     views(spark, sf_dir)
-    src = _events_dump(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-        ]
+    streamed = gate(
+        spark, SS.stream_sessions, _events_dump(spark, sf_dir),
+        "event_id long, ts timestamp_ntz, user_id long",
+        F.col("user_id") >= 0,
     )
-    root = tempfile.mkdtemp(prefix="sessions_gate_")
-    try:
-        SS.stream_sessions(
-            spark, src, schema, f"{root}/ckpt", f"{root}/out",
-            max_files_per_trigger=None,
-        )
-        streamed = (
-            SS.read_sessions(spark, f"{root}/out")
-            .where(F.col("user_id") >= 0)
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     w = Wnd.partitionBy("user_id").orderBy("session_start_us")
     return streamed.select(
         "user_id",
@@ -213,36 +154,14 @@ def q_events_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_events_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark import StorageLevel
-    from pyspark.sql import types as T
-
     from .streaming import windows as SW
 
     views(spark, sf_dir)
-    src = _events_dump(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
+    drained = gate(
+        spark, SW.stream_hourly_counts, _events_dump(spark, sf_dir),
+        "ts timestamp_ntz, event_type string, value double",
+        F.col("event_type") != _SENTINEL_TYPE,
     )
-    root = tempfile.mkdtemp(prefix="hourly_gate_")
-    try:
-        SW.stream_hourly_counts(
-            spark, src, schema, f"{root}/ckpt", f"{root}/out",
-            max_files_per_trigger=None,
-        )
-        drained = (
-            SW.read_hourly(spark, f"{root}/out")
-            .where(F.col("event_type") != _SENTINEL_TYPE)
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return drained.select(
         F.col("hour_start").cast("timestamp_ntz").alias("hour_start"),
         "event_type",

@@ -46,6 +46,7 @@ from .queries import (
 )
 from .queries_text import _h60_sql
 from .session import session_token
+from .streaming.gate import gate, sentinel_dump
 
 # ----------------------------------------------------------------------
 # dwithin_join: every (page, footprint-centroid) pair within DWITHIN_DEG
@@ -478,7 +479,7 @@ def q_host_tile_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tile_counts_streamed: the batch page_tile_counts twin under Structured
 # Streaming (streaming/tiles.py) — continuous tile assignment with a
 # watermarked tumbling window, the §2.9 streaming story applied to the
-# SPATIAL core. Gate plumbing (this function only): the pages table is
+# SPATIAL core. Gate plumbing (streaming/gate.py): the pages table is
 # dumped once per (session, sf_dir) as partitioned parquet plus one
 # far-future sentinel file so the cold availableNow drain's watermark
 # passes the single 24h data window; the sentinel's group is filtered by
@@ -488,39 +489,6 @@ def q_host_tile_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # page_tile_counts oracle.
 
 _TILE_SENTINEL_MARGIN_S = 48 * 3600  # > window (24h) + watermark (1h)
-_TILE_DUMP_CACHE: dict = {}
-
-
-def _pages_geo_dump(spark: SparkSession, sf_dir: str) -> str:
-    key = (session_token(spark), sf_dir)
-    hit = _TILE_DUMP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import atexit
-    import shutil
-    import tempfile
-
-    pg = spark.table("pages").select(
-        F.col("warc_ts").cast("timestamp_ntz").alias("ts"),
-        "page_id",
-        "lon",
-        "lat",
-    )
-    far = pg.agg(F.max(F.unix_micros(F.col("ts").cast("timestamp")))).first()[0]
-    root = tempfile.mkdtemp(prefix="tilecounts_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    pg.write.parquet(f"{root}/data")
-    sentinel_us = int(far) + _TILE_SENTINEL_MARGIN_S * 1_000_000
-    spark.createDataFrame(
-        [(-1, C.LON_W, C.LAT_S)], "page_id long, lon double, lat double"
-    ).select(
-        F.timestamp_micros(F.lit(sentinel_us)).cast("timestamp_ntz").alias("ts"),
-        "page_id",
-        "lon",
-        "lat",
-    ).write.parquet(f"{root}/sentinel")
-    _TILE_DUMP_CACHE[key] = f"{root}/*"
-    return _TILE_DUMP_CACHE[key]
 
 
 def _tile_counts_oracle() -> str:
@@ -539,39 +507,19 @@ GROUP BY 1
 
 @register("tile_counts_streamed", _tile_counts_oracle())
 def q_tile_counts_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark import StorageLevel
-
-    from pyspark.sql import types as T
-
     from .streaming import tiles as ST
 
     views(spark, sf_dir)
-    src = _pages_geo_dump(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("page_id", T.LongType()),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-        ]
+    src = sentinel_dump(
+        spark, sf_dir, "pages", "warc_ts",
+        {"page_id": -1, "lon": C.LON_W, "lat": C.LAT_S},
+        _TILE_SENTINEL_MARGIN_S,
     )
-    root = tempfile.mkdtemp(prefix="tilecounts_run_")
-    try:
-        ST.stream_tile_counts(
-            spark, src, schema, f"{root}/ckpt", f"{root}/out",
-            max_files_per_trigger=None,
-        )
-        drained = (
-            ST.read_tile_counts(spark, f"{root}/out")
-            .where(F.col("min_page_id") >= 0)
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return drained.select("tile_id", "page_count")
+    return gate(
+        spark, ST.stream_tile_counts, src,
+        "ts timestamp_ntz, page_id long, lon double, lat double",
+        F.col("min_page_id") >= 0,
+    ).select("tile_id", "page_count")
 
 
 # ----------------------------------------------------------------------

@@ -35,6 +35,7 @@ from . import synth
 from .queries import cut, register, stage, views
 from .queries_text import _TOKENS_SQL_DUCK
 from .session import session_token
+from .streaming.gate import gate, sentinel_dump
 
 # ----------------------------------------------------------------------
 # S-URL: canonicalization + exact dedup over the canonical form.
@@ -351,82 +352,35 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------------------------------
 # §2.9 under the driver gate, crawl flavor: streaming ingest dedup.
-# GATE-ONLY plumbing mirrors queries_events._events_dump: one
-# partitioned parquet dump of (ts, page_id, url) per (session, sf_dir)
-# plus a far-future sentinel file whose arrival advances the event-time
-# watermark past every real 24h window's end, so the availableNow drain
-# finalizes and emits all real groups; the sentinel's own window stays
-# open and its group is filtered out (page_id -1). All synth warc_ts
-# fall inside ONE aligned 24h window, so each canonical group emits
-# exactly one row and the drained output hash-matches the BATCH oracle
-# (same SQL as dedup_url_canonical). Production: real WARC arrival
-# files, no sentinel — the watermark advances with ordinary arrivals.
+# GATE-ONLY plumbing (streaming/gate.py): one partitioned parquet dump
+# of (ts, page_id, url) per (session, sf_dir) plus a far-future sentinel
+# file whose arrival advances the event-time watermark past every real
+# 24h window's end, so the availableNow drain finalizes and emits all
+# real groups; the sentinel's own window stays open and its group is
+# filtered out (page_id -1). All synth warc_ts fall inside ONE aligned
+# 24h window, so each canonical group emits exactly one row and the
+# drained output hash-matches the BATCH oracle (same SQL as
+# dedup_url_canonical). Production: real WARC arrival files, no
+# sentinel — the watermark advances with ordinary arrivals.
 
 _URL_SENTINEL_MARGIN_S = 48 * 3600  # > window (24h) + watermark (1h)
-_URL_DUMP_CACHE: dict = {}
-
-
-def _pages_dump(spark: SparkSession, sf_dir: str) -> str:
-    key = (session_token(spark), sf_dir)
-    hit = _URL_DUMP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import atexit
-    import shutil
-    import tempfile
-
-    pg = spark.table("pages").select(
-        F.col("warc_ts").cast("timestamp_ntz").alias("ts"), "page_id", "url"
-    )
-    far = pg.agg(F.max(F.unix_micros(F.col("ts").cast("timestamp")))).first()[0]
-    root = tempfile.mkdtemp(prefix="urldedup_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    pg.write.parquet(f"{root}/data")
-    sentinel_us = int(far) + _URL_SENTINEL_MARGIN_S * 1_000_000
-    spark.createDataFrame(
-        [(-1, "https://zz-sentinel.invalid/x")], "page_id long, url string"
-    ).select(
-        F.timestamp_micros(F.lit(sentinel_us)).cast("timestamp_ntz").alias("ts"),
-        "page_id",
-        "url",
-    ).write.parquet(f"{root}/sentinel")
-    _URL_DUMP_CACHE[key] = f"{root}/*"
-    return _URL_DUMP_CACHE[key]
 
 
 @register("url_dedup_streamed", _URL_CANON_ORACLE)
 def q_url_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark import StorageLevel
-    from pyspark.sql import types as T
-
     from .streaming import urldedup as SU
 
     views(spark, sf_dir)
-    src = _pages_dump(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("page_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-        ]
+    src = sentinel_dump(
+        spark, sf_dir, "pages", "warc_ts",
+        {"page_id": -1, "url": "https://zz-sentinel.invalid/x"},
+        _URL_SENTINEL_MARGIN_S,
     )
-    root = tempfile.mkdtemp(prefix="urldedup_run_")
-    try:
-        SU.stream_url_dedup(
-            spark, src, schema, f"{root}/ckpt", f"{root}/out",
-            max_files_per_trigger=None,
-        )
-        drained = (
-            SU.read_url_groups(spark, f"{root}/out")
-            .where(F.col("first_page_id") >= 0)
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return drained.select("canonical_url", "n_pages", "first_page_id")
+    return gate(
+        spark, SU.stream_url_dedup, src,
+        "ts timestamp_ntz, page_id long, url string",
+        F.col("first_page_id") >= 0,
+    ).select("canonical_url", "n_pages", "first_page_id")
 
 
 # ----------------------------------------------------------------------

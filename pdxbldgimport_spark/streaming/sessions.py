@@ -2,21 +2,21 @@
 ``applyInPandasWithState`` (round instructions §streaming: "custom
 stateful operators"; the batch twin is queries_events.q_events_sessions,
 re-expressing the reference's timestamp-DAG incrementality over the
-webtext events table).
+webtext events table), run through the shared drain (drain.py).
 
 Semantics match the batch query exactly **when source dumps are
 time-ordered across files** (true for this pipeline's ledger-style
-dumps): with the default ``watermark='0 seconds'`` an event arriving in
-a later micro-batch with ts below the current watermark is dropped
-before the stateful operator, so out-of-order-across-files sources need
-a nonzero ``watermark`` (accepting correspondingly later session
-closure) to keep batch equivalence. A session is a maximal run of a
-user's events where each microsecond-exact gap ≤ ``gap_s``. State per
-user = the open session (start_us, last_us, n_events). A micro-batch
-may close sessions intra-batch (gap inside the batch) — those emit
-immediately; the open tail session emits when the EVENT-TIME watermark
-passes ``last + gap`` (GroupStateTimeout.EventTimeTimeout), so output
-needs no rewrites — the append-only contract every sink here follows.
+dumps): with ``WATERMARK = '0 seconds'`` an event arriving in a later
+micro-batch with ts below the current watermark is dropped before the
+stateful operator, so out-of-order-across-files sources would need a
+nonzero watermark (accepting correspondingly later session closure) to
+keep batch equivalence. A session is a maximal run of a user's events
+where each microsecond-exact gap ≤ ``SESSION_GAP_S``. State per user =
+the open session (start_us, last_us, n_events). A micro-batch may close
+sessions intra-batch (gap inside the batch) — those emit immediately;
+the open tail session emits when the EVENT-TIME watermark passes
+``last + gap`` (GroupStateTimeout.EventTimeTimeout), so output needs no
+rewrites — the append-only contract every sink here follows.
 
 Scale shape: state is O(active users) × 24 bytes, partitioned by the
 groupBy key; each micro-batch touches only users present in the batch
@@ -29,10 +29,14 @@ from __future__ import annotations
 from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .drain import drain
+
 SESSION_GAP_S = 600  # keep in sync with queries_events.SESSION_GAP_S
+WATERMARK = "0 seconds"
+_GAP_US = SESSION_GAP_S * 1_000_000
 
 OUT_SCHEMA = T.StructType(
     [
@@ -51,63 +55,72 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _session_fn(gap_s: int):
-    gap_us = gap_s * 1_000_000
+def _session_fn(
+    key: Tuple[Any, ...],
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterable[pd.DataFrame]:
+    user_id = key[0]
+    if state.hasTimedOut:
+        start_us, last_us, n = state.get
+        state.remove()
+        yield pd.DataFrame(
+            {
+                "user_id": [user_id],
+                "session_start_us": [start_us],
+                "session_end_us": [last_us],
+                "n_events": [n],
+            }
+        )
+        return
 
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        user_id = key[0]
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start_us": [start_us],
-                    "session_end_us": [last_us],
-                    "n_events": [n],
-                }
-            )
-            return
+    rows = pd.concat(list(pdfs), ignore_index=True)
+    rows = rows.sort_values(["ts", "event_id"])
+    # pandas datetime64[ns] → exact microseconds
+    us = (
+        rows["ts"].to_numpy().astype("datetime64[ns]").astype("int64") // 1000
+    )
 
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        # pandas datetime64[ns] → exact microseconds
-        us = (
-            rows["ts"].to_numpy().astype("datetime64[ns]").astype("int64") // 1000
+    if state.exists:
+        start_us, last_us, n = state.get
+    else:
+        start_us = last_us = int(us[0])
+        n = 0
+    closed = []
+    for t in us:
+        t = int(t)
+        if n > 0 and t - last_us > _GAP_US:
+            closed.append((start_us, last_us, n))
+            start_us = t
+            n = 0
+        last_us = max(last_us, t)
+        n += 1
+    state.update((start_us, last_us, n))
+    # close the open session once the watermark passes last + gap
+    state.setTimeoutTimestamp(last_us // 1000 + SESSION_GAP_S * 1000)
+    if closed:
+        yield pd.DataFrame(
+            {
+                "user_id": [user_id] * len(closed),
+                "session_start_us": [c[0] for c in closed],
+                "session_end_us": [c[1] for c in closed],
+                "n_events": [c[2] for c in closed],
+            }
         )
 
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us = last_us = int(us[0])
-            n = 0
-        closed = []
-        for t in us:
-            t = int(t)
-            if n > 0 and t - last_us > gap_us:
-                closed.append((start_us, last_us, n))
-                start_us = t
-                n = 0
-            last_us = max(last_us, t)
-            n += 1
-        state.update((start_us, last_us, n))
-        # close the open session once the watermark passes last + gap
-        state.setTimeoutTimestamp(last_us // 1000 + gap_s * 1000)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_start_us": [c[0] for c in closed],
-                    "session_end_us": [c[1] for c in closed],
-                    "n_events": [c[2] for c in closed],
-                }
-            )
 
-    return fn
+def _sessions(ev: DataFrame) -> DataFrame:
+    return (
+        ev.select("event_id", "ts", "user_id")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _session_fn,
+            OUT_SCHEMA,
+            STATE_SCHEMA,
+            "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
 
 
 def stream_sessions(
@@ -116,8 +129,6 @@ def stream_sessions(
     schema,
     ckpt_dir: str,
     out_dir: str,
-    gap_s: int = SESSION_GAP_S,
-    watermark: str = "0 seconds",
     max_files_per_trigger: int | None = 1,
 ) -> dict | None:
     """Drain available event dumps, maintaining per-user session state
@@ -126,44 +137,12 @@ def stream_sessions(
     (state-store rows, batch metrics) for bench/ops visibility.
 
     ``max_files_per_trigger=None`` drains everything in ONE data batch
-    (plus availableNow's watermark-flush batch): with ``watermark='0
-    seconds'`` nothing is dropped intra-batch regardless of file order,
+    (plus availableNow's watermark-flush batch): with the 0-second
+    watermark nothing is dropped intra-batch regardless of file order,
     so unordered partitioned dumps are safe on this path — the
     time-ordered-files requirement in the module docstring applies only
     to multi-batch drains."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = (
-        reader.parquet(src_glob)
-        # parquet ts is NTZ; watermark/timeout machinery wants TIMESTAMP
-        # (session tz is pinned UTC, so the cast is a no-op re-label)
-        .select(
-            "event_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "user_id",
-        )
-        .withWatermark("ts", watermark)
+    return drain(
+        spark, src_glob, schema, ckpt_dir, out_dir,
+        _sessions, WATERMARK, max_files_per_trigger,
     )
-    q = (
-        ev.groupBy("user_id")
-        .applyInPandasWithState(
-            _session_fn(gap_s),
-            OUT_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q.lastProgress
-
-
-def read_sessions(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)

@@ -8,14 +8,16 @@ This is the built-in-operator streaming path (like streaming/windows.py)
 applied to the SPATIAL core: state is O(open windows × occupied tiles) —
 bounded by the grid, independent of history length — which is what lets
 the 100-TB tiler run as one continuous job instead of daily batches.
-Exactly-once: append mode + file sink + checkpoint; a killed run resumes
-without re-emitting finalized (window, tile) rows.
+Exactly-once: the shared drain's append-mode file sink + checkpoint
+(drain.py); a killed run — even one killed between the sink write and
+the offset commit — resumes without re-emitting finalized (window,
+tile) rows (tests/test_streaming_tiles.py).
 
-Sentinel convention (gate-only, same as streaming/urldedup.py): the
-driver gate appends one far-future marker row (page_id = -1) so the
-cold drain's watermark passes the data window; the marker's own group is
-filtered by its negative min(page_id). Production runs have no sentinel
-— the watermark advances with ordinary arrivals.
+Sentinel convention (gate-only, see streaming/gate.py): the oracle gate
+appends one far-future marker row (page_id = -1) so the cold drain's
+watermark passes the data window; the marker's own group is filtered by
+its negative min(page_id). Production runs have no sentinel — the
+watermark advances with ordinary arrivals.
 """
 
 from __future__ import annotations
@@ -24,42 +26,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..geo import cells as C
 from ..operators.pip_join import tile_expr
+from .drain import drain
 
 WATERMARK = "1 hour"
 WINDOW = "24 hours"
 
 
-def stream_tile_counts(
-    spark: SparkSession,
-    src_glob: str,
-    schema,
-    ckpt_dir: str,
-    out_dir: str,
-    res: int = C.RES_TILE,
-    watermark: str = WATERMARK,
-    max_files_per_trigger: int | None = 1,
-) -> dict | None:
-    """Drain available page dumps through a watermarked tumbling window
-    per tile; finalized (window, tile) rows append to ``out_dir`` with
-    the window start, the count, and min(page_id) (the sentinel marker
-    filter; also the resumable-run audit anchor)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = (
-        reader.parquet(src_glob)
-        .select(
-            F.col("ts").cast("timestamp").alias("ts"),
-            "page_id",
-            "lon",
-            "lat",
-        )
-        .withWatermark("ts", watermark)
-    )
-    agg = (
-        ev.groupBy(
+def _tile_counts(pg: DataFrame) -> DataFrame:
+    return (
+        pg.groupBy(
             F.window("ts", WINDOW),
-            tile_expr(F.col("lon"), F.col("lat"), res).alias("tile_id"),
+            tile_expr(F.col("lon"), F.col("lat"), C.RES_TILE).alias("tile_id"),
         )
         .agg(
             F.count(F.lit(1)).alias("page_count"),
@@ -72,17 +49,21 @@ def stream_tile_counts(
             "min_page_id",
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+
+
+def stream_tile_counts(
+    spark: SparkSession,
+    src_glob: str,
+    schema,
+    ckpt_dir: str,
+    out_dir: str,
+    max_files_per_trigger: int | None = 1,
+) -> dict | None:
+    """Drain available page dumps through a watermarked tumbling window
+    per tile; finalized (window, tile) rows append to ``out_dir`` with
+    the window start, the count, and min(page_id) (the sentinel marker
+    filter; also the resumable-run audit anchor)."""
+    return drain(
+        spark, src_glob, schema, ckpt_dir, out_dir,
+        _tile_counts, WATERMARK, max_files_per_trigger,
     )
-    q.awaitTermination()
-    return q.lastProgress
-
-
-def read_tile_counts(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)

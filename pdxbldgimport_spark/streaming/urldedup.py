@@ -14,16 +14,36 @@ MIN(page_id) — unlike streaming ``dropDuplicates`` (whose survivor
 depends on partition arrival order), the aggregated min is
 order-independent, so the drained output hash-matches the batch oracle.
 
-Exactly-once story: append-mode + file sink + checkpoint, same as
-windows.py.
+Exactly-once story: the shared drain's append-mode file sink +
+checkpoint (drain.py), same as windows.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .drain import drain
+
 WATERMARK = "1 hour"
 WINDOW = "24 hours"
+
+
+def _url_groups(pg: DataFrame) -> DataFrame:
+    from ..queries_web import canonical_url_expr
+
+    # group on the full window struct (see windows.py: extracting .start
+    # inside the groupBy severs the watermark link)
+    return (
+        pg.groupBy(
+            F.window("ts", WINDOW),
+            canonical_url_expr("url").alias("canonical_url"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_pages"),
+            F.min("page_id").alias("first_page_id"),
+        )
+        .select("canonical_url", "n_pages", "first_page_id")
+    )
 
 
 def stream_url_dedup(
@@ -32,47 +52,11 @@ def stream_url_dedup(
     schema,
     ckpt_dir: str,
     out_dir: str,
-    watermark: str = WATERMARK,
-    window: str = WINDOW,
     max_files_per_trigger: int | None = 1,
 ) -> dict | None:
     """Drain available page dumps; finalized (window, canonical_url)
     groups append to ``out_dir`` with n_pages + min page_id."""
-    from ..queries_web import canonical_url_expr
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pg = (
-        reader.parquet(src_glob)
-        .select(
-            F.col("ts").cast("timestamp").alias("ts"),
-            "page_id",
-            canonical_url_expr("url").alias("canonical_url"),
-        )
-        .withWatermark("ts", watermark)
+    return drain(
+        spark, src_glob, schema, ckpt_dir, out_dir,
+        _url_groups, WATERMARK, max_files_per_trigger,
     )
-    # group on the full window struct (see windows.py: extracting .start
-    # inside the groupBy severs the watermark link)
-    agg = (
-        pg.groupBy(F.window("ts", window), "canonical_url")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.min("page_id").alias("first_page_id"),
-        )
-        .select("canonical_url", "n_pages", "first_page_id")
-    )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q.lastProgress
-
-
-def read_url_groups(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)

@@ -9,53 +9,29 @@ the watermark allows — the semantics a continuously-ingesting 100-TB
 pipeline needs to keep window state bounded (state size is O(open
 windows), independent of history length).
 
-Exactly-once story: append-mode + file sink — a finalized window row is
-appended once; a killed run resumes from the checkpoint without
-re-emitting. Late-data story: tests/test_streaming_windows.py replays a
-dump sequence where an already-finalized window's event arrives late and
-asserts it is dropped, and the driver gate (`events_hourly_streamed`)
-hash-checks the drained output against the batch `events_hourly` oracle.
+Exactly-once story: the shared drain's append-mode file sink
+(drain.py) — a finalized window row is appended once; a killed run
+resumes from the checkpoint without re-emitting. Late-data story:
+tests/test_streaming_windows.py replays a dump sequence where an
+already-finalized window's event arrives late and asserts it is
+dropped, and the oracle gate (`events_hourly_streamed`) hash-checks the
+drained output against the batch `events_hourly` oracle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .drain import drain
+
 WATERMARK = "1 hour"
 
 
-def stream_hourly_counts(
-    spark: SparkSession,
-    src_glob: str,
-    schema,
-    ckpt_dir: str,
-    out_dir: str,
-    watermark: str = WATERMARK,
-    max_files_per_trigger: int | None = 1,
-) -> dict | None:
-    """Drain available event dumps through a watermarked 1-hour tumbling
-    window per event_type; finalized windows append to ``out_dir``.
-    ``max_files_per_trigger=None`` → one data batch (order-insensitive:
-    within a batch the watermark filter uses the PREVIOUS batch's
-    watermark, so nothing is late on a cold single-batch drain)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = (
-        reader.parquet(src_glob)
-        # parquet ts is NTZ; the window/watermark machinery wants
-        # TIMESTAMP (session tz pinned UTC — no-op re-label)
-        .select(
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_type",
-            "value",
-        )
-        .withWatermark("ts", watermark)
-    )
+def _hourly(ev: DataFrame) -> DataFrame:
     # group on the full window struct — extracting .start inside the
     # groupBy severs the watermark-to-aggregation link the streaming
     # analyzer needs for append mode
-    agg = (
+    return (
         ev.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -70,17 +46,22 @@ def stream_hourly_counts(
             "value_cents",
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+
+
+def stream_hourly_counts(
+    spark: SparkSession,
+    src_glob: str,
+    schema,
+    ckpt_dir: str,
+    out_dir: str,
+    max_files_per_trigger: int | None = 1,
+) -> dict | None:
+    """Drain available event dumps through a watermarked 1-hour tumbling
+    window per event_type; finalized windows append to ``out_dir``.
+    ``max_files_per_trigger=None`` → one data batch (order-insensitive:
+    within a batch the watermark filter uses the PREVIOUS batch's
+    watermark, so nothing is late on a cold single-batch drain)."""
+    return drain(
+        spark, src_glob, schema, ckpt_dir, out_dir,
+        _hourly, WATERMARK, max_files_per_trigger,
     )
-    q.awaitTermination()
-    return q.lastProgress
-
-
-def read_hourly(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)

@@ -68,16 +68,20 @@ def test_pip_join_slot_cover_vs_bruteforce(spark):
     assert got == _bruteforce(polys, px, py)
 
 
-def test_pip_join_shuffle_path_matches_broadcast(spark):
-    """Planner-choice invariance: forcing the shuffle+salt path yields the
-    same pairs as the broadcast slot-cover path."""
+def _stars_and_points(spark):
     rng = np.random.default_rng(7)
     polys = [(i, [_star(rng, int(rng.integers(3, 7)))]) for i in range(25)]
     npts = 20_000
     px = C.LON_W + rng.random(npts) * C.SPAN_X
     py = C.LAT_S + rng.random(npts) * C.SPAN_Y
     pts = spark.createDataFrame(pd.DataFrame({"pt": np.arange(npts), "lon": px, "lat": py}))
-    pdf_polys = spark.createDataFrame(polys, POLY_SCHEMA)
+    return pts, spark.createDataFrame(polys, POLY_SCHEMA)
+
+
+def test_pip_join_shuffle_path_matches_broadcast(spark):
+    """Planner-choice invariance: forcing the shuffle+salt path yields the
+    same pairs as the broadcast slot-cover path."""
+    pts, pdf_polys = _stars_and_points(spark)
     bc = {(r["pt"], r["poly"]) for r in pip_join(pts, pdf_polys, "pt", "poly").collect()}
     sh = {
         (r["pt"], r["poly"])
@@ -86,6 +90,21 @@ def test_pip_join_shuffle_path_matches_broadcast(spark):
         ).collect()
     }
     assert bc == sh
+
+
+def test_cover_row_cap_falls_back_to_shuffle(spark, monkeypatch):
+    """A slot cover over BROADCAST_MAX_ROWS is not broadcast:
+    build_broadcast_cover returns None and pip_join (no prebuilt cover)
+    falls through to the shuffle path with the broadcast path's pairs."""
+    import pdxbldgimport_spark.operators.pip_join as PJ
+
+    pts, pdf_polys = _stars_and_points(spark)
+    bc = {(r["pt"], r["poly"]) for r in pip_join(pts, pdf_polys, "pt", "poly").collect()}
+    assert bc
+    monkeypatch.setattr(PJ, "BROADCAST_MAX_ROWS", 0)
+    assert PJ.build_broadcast_cover(pdf_polys, "poly", "rings") is None
+    sh = {(r["pt"], r["poly"]) for r in pip_join(pts, pdf_polys, "pt", "poly").collect()}
+    assert sh == bc
 
 
 def test_pip_join_manifest_fed_hot_cells(spark, tmp_path):

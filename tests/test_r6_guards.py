@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pdxbldgimport_spark.queries_crawl import (
     PII_EMAIL,
     PII_IP,
+    PII_LAYERS,
     PII_PHONE,
     _pii_guarded_scrub,
 )
@@ -58,6 +59,14 @@ def test_pii_guard_soundness_vs_python_re(spark):
         s = re.sub(PII_PHONE, "<PHONE>", s, flags=A)
         s = re.sub(PII_IP, "<IP>", s, flags=A)
         assert g == s, text
+
+
+def test_pii_tokens_carry_no_later_guard():
+    # a guard is checked on the ORIGINAL text, so it is sound only if no
+    # earlier layer's replacement token introduces a later layer's guard
+    for i, (_, _, token) in enumerate(PII_LAYERS):
+        for guard, _, _ in PII_LAYERS[i + 1:]:
+            assert guard not in token, (token, guard)
 
 
 TAG_CASES = [

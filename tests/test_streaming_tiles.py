@@ -1,10 +1,13 @@
 """Streaming tile counts (streaming/tiles.py): a (window, tile) group
 emits exactly once when the watermark passes the window end — including
-across a stop/restart from checkpoint — and late pages for a finalized
+across a stop/restart from checkpoint and a replay after a crash between
+the sink write and the offset commit — and late pages for a finalized
 window are DROPPED. (Equality of the drained output with the batch
 page_tile_counts oracle is the driver-gated `tile_counts_streamed`.)"""
 
 from __future__ import annotations
+
+import os
 
 from pdxbldgimport_spark.geo import cells as C
 from pdxbldgimport_spark.streaming import tiles as ST
@@ -42,7 +45,7 @@ def test_tile_window_emits_once_and_drops_late(spark, tmp_path):
     ST.stream_tile_counts(spark, f"{src}/*", schema, ckpt, out)
     got = {
         (str(r["window_start"]), r["tile_id"]): r["page_count"]
-        for r in ST.read_tile_counts(spark, out).collect()
+        for r in spark.read.parquet(out).collect()
     }
     assert got == {
         ("2024-01-01 00:00:00", T0): 2,
@@ -57,7 +60,7 @@ def test_tile_window_emits_once_and_drops_late(spark, tmp_path):
     ])
     ST.stream_tile_counts(spark, f"{src}/*", schema, ckpt, out)
     got2 = {}
-    for r in ST.read_tile_counts(spark, out).collect():
+    for r in spark.read.parquet(out).collect():
         k = (str(r["window_start"]), r["tile_id"])
         assert k not in got2, f"duplicate emission {k}"
         got2[k] = r["page_count"]
@@ -66,3 +69,39 @@ def test_tile_window_emits_once_and_drops_late(spark, tmp_path):
     assert got2[("2024-01-01 00:00:00", T0)] == 2
     assert got2[("2024-01-01 00:00:00", T1)] == 1
     assert got2[("2024-01-03 00:00:00", T1)] == 1
+
+
+def test_tile_counts_survive_sink_commit_crash(spark, tmp_path):
+    """A crash AFTER the sink write but BEFORE the checkpoint commit
+    replays the batch on resume. Simulate that window by deleting the
+    newest ckpt/commits entry (the sink output stays on disk), then
+    resume: the file sink's batch log must make the replay a no-op — no
+    (window_start, tile_id) row twice, counts unchanged."""
+    src, ckpt, out = str(tmp_path / "s"), str(tmp_path / "c"), str(tmp_path / "o")
+    schema = spark.createDataFrame([], SCHEMA).schema
+    _write(spark, f"{src}/f1", [
+        ("2024-01-01 08:00:00", 1, *P0),
+        ("2024-01-01 09:00:00", 2, *P0),
+        ("2024-01-01 10:00:00", 3, *P1),
+    ])
+    _write(spark, f"{src}/f2", [("2024-01-03 12:00:00", 4, *P1)])
+    ST.stream_tile_counts(spark, f"{src}/*", schema, ckpt, out)
+    want = {
+        ("2024-01-01 00:00:00", T0): 2,
+        ("2024-01-01 00:00:00", T1): 1,
+    }
+
+    commits = os.path.join(ckpt, "commits")
+    newest = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(newest)))  # crash window
+    crc = os.path.join(commits, f".{newest}.crc")
+    if os.path.exists(crc):  # hadoop checksum shadow of the commit file
+        os.remove(crc)
+
+    ST.stream_tile_counts(spark, f"{src}/*", schema, ckpt, out)  # replay
+    got = {}
+    for r in spark.read.parquet(out).collect():
+        k = (str(r["window_start"]), r["tile_id"])
+        assert k not in got, f"duplicate emission {k}"
+        got[k] = r["page_count"]
+    assert got == want

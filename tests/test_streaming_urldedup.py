@@ -46,7 +46,7 @@ def test_url_dedup_groups_canonical_variants_and_resumes(spark, tmp_path):
     SU.stream_url_dedup(spark, f"{src}/*", schema, ckpt, out)
     got = {
         r["canonical_url"]: (r["n_pages"], r["first_page_id"])
-        for r in SU.read_url_groups(spark, out).collect()
+        for r in spark.read.parquet(out).collect()
     }
     # day-0 window finalized: variants collapse, min page_id survives
     assert got == {
@@ -67,7 +67,7 @@ def test_url_dedup_groups_canonical_variants_and_resumes(spark, tmp_path):
     SU.stream_url_dedup(spark, f"{src}/*", schema, ckpt, out)
     got2 = {
         r["canonical_url"]: (r["n_pages"], r["first_page_id"])
-        for r in SU.read_url_groups(spark, out).collect()
+        for r in spark.read.parquet(out).collect()
     }
     assert got2["https://a.example.com/p/1"] == (3, 5)  # NOT re-emitted/grown
     assert got2["https://c.example.com/next-day"] == (2, 100)

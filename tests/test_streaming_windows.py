@@ -38,7 +38,7 @@ def test_window_emits_once_and_drops_late(spark, tmp_path):
     SW.stream_hourly_counts(spark, f"{src}/*", schema, ckpt, out)
     got = {
         (str(r["hour_start"]), r["event_type"]): (r["n_events"], r["value_cents"])
-        for r in SW.read_hourly(spark, out).collect()
+        for r in spark.read.parquet(out).collect()
     }
     assert got == {
         (D + "00:00:00", "view"): (2, 300),
@@ -55,7 +55,7 @@ def test_window_emits_once_and_drops_late(spark, tmp_path):
     _write(spark, f"{src}/f4", [(D + "16:00:00", "view", 0.0)])
     _write(spark, f"{src}/f5", [(D + "17:00:00", "view", 0.0)])
     SW.stream_hourly_counts(spark, f"{src}/*", schema, ckpt, out)
-    rows = SW.read_hourly(spark, out).collect()
+    rows = spark.read.parquet(out).collect()
     got2 = {}
     for r in rows:
         key = (str(r["hour_start"]), r["event_type"])
@@ -81,7 +81,7 @@ def test_state_is_bounded_by_open_windows(spark, tmp_path):
     _write(spark, f"{src}/f1", [(D + f"0{h}:15:00", "view", 1.0) for h in range(5)])
     _write(spark, f"{src}/f2", [(D + "09:00:00", "view", 1.0)])
     progress = SW.stream_hourly_counts(spark, f"{src}/*", schema, ckpt, out)
-    emitted = {str(r["hour_start"]) for r in SW.read_hourly(spark, out).collect()}
+    emitted = {str(r["hour_start"]) for r in spark.read.parquet(out).collect()}
     # after the drain the watermark is 08:00 (09:00 - 1h; Spark's final
     # no-data batch flushes everything under it): hours 00-04 emitted,
     # the 09:00 window alone stays in state
