@@ -30,14 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MAX_ROUNDS = 25  # convergence-test budget; ~log2 of any graph that fits this planet
-# Star-rounds fused per lineage cut + convergence test. Measured at
-# sf0.1 (same host window, min-of-2): BATCH_ROUNDS=2 is ~2x SLOWER than
-# 1 — the duplicated DataFrame references inside a fused round multiply
-# map-side recompute faster than the saved convergence-test jobs pay
-# back (ReuseExchange dedupes only identical shuffle subtrees, and the
-# star ops' branches shuffle different projections). Keep at 1; the win
-# over the previous shape is the lazy cut (one job per round, not two).
-BATCH_ROUNDS = 1
 
 
 def _checksum(edges: DataFrame) -> tuple:
@@ -100,7 +92,7 @@ def connected_components(
     from pyspark import StorageLevel
 
     def _cut(df: DataFrame) -> DataFrame:
-        # LAZY lineage cut per batch: without it the logical plan keeps
+        # LAZY lineage cut per round: without it the logical plan keeps
         # nesting and Catalyst re-analyzes an exponentially growing
         # operator tree. eager=False so the _checksum action both
         # materializes the checkpoint AND reads the convergence
@@ -125,19 +117,9 @@ def connected_components(
     )
     prev = None
     for _ in range(MAX_ROUNDS):
-        # BATCH_ROUNDS star-rounds per materialization: the driver-side
-        # convergence test (one small collect) is the per-iteration
-        # fixed cost, so fusing rounds amortizes it; identical shuffle
-        # subtrees inside the fused plan are deduplicated by Spark's
-        # ReuseExchange, so the duplicated DataFrame references do not
-        # recompute their shuffles. Extra rounds past the fixpoint are
-        # no-ops (both star ops are identity on a star forest).
-        e2 = e
-        for _ in range(BATCH_ROUNDS):
-            e2 = _round(e2)
-        e2 = _cut(e2)
-        cur = _checksum(e2)
-        e = e2
+        # one star-round per cut: fusing two measured about 2x slower (r5, sf0.1)
+        e = _cut(_round(e))
+        cur = _checksum(e)
         if cur == prev or cur[0] == 0:
             break
         prev = cur

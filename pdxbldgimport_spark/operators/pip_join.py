@@ -44,13 +44,6 @@ from ..geo import cells as C
 from ..geo.core import RingSet, points_in_polygons_pairs
 
 
-def _DISK_ONLY():
-    # heap-neutral checkpoint blocks (see queries.stage for the measured
-    # session-aging rationale)
-    from pyspark import StorageLevel
-
-    return StorageLevel.DISK_ONLY
-
 # Exploded slot-cover row count above which build_broadcast_cover
 # refuses to broadcast (returns None → caller routes to the shuffle
 # path). Second gate after broadcast_max_polys: a few big polygons can
@@ -568,9 +561,9 @@ def pip_join(
     # carry only flat scalars through the shuffle and refine with the
     # codegen slot predicate; rare >K-slot rows keep rings and refine via
     # the ray-cast HOF on their own (small) branch.
-    cover = polygon_cover_slots(
-        polys, poly_id, rings_col, res
-    ).localCheckpoint(eager=True, storageLevel=_DISK_ONLY())
+    from ..queries import cut  # queries imports this module
+
+    cover = cut(polygon_cover_slots(polys, poly_id, rings_col, res))
     has_exact = cover.where(F.col("exact")).limit(1).count() > 0
 
     def salted(cov: DataFrame, pts_in: DataFrame):

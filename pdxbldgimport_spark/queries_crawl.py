@@ -177,11 +177,7 @@ def q_host_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked = (
         spark.range(synth.NP)
         .where(F.col("id") % BLOCK_MOD == BLOCK_RESIDUE)
-        .select(
-            F.concat(
-                F.lit("h"), F.col("id").cast("string"), F.lit(".example.com")
-            ).alias("bhost")
-        )
+        .select(synth.host_name(F.col("id")).alias("bhost"))
     )
     hosts = spark.table("pages").select(
         "page_id",
@@ -572,9 +568,7 @@ def q_robots_path_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.range(synth.NP)
         .where(F.col("id") % ROBOTS_MOD == ROBOTS_RESIDUE)
         .select(
-            F.concat(
-                F.lit("h"), F.col("id").cast("string"), F.lit(".example.com")
-            ).alias("rhost"),
+            synth.host_name(F.col("id")).alias("rhost"),
             F.lit(ROBOTS_PREFIX).alias("prefix"),
         )
     )

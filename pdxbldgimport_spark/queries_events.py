@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as Wnd
 
+from .operators.propagate import propagate
 from .queries import register, views
 from .streaming.gate import gate, sentinel_dump
 
@@ -2447,21 +2448,11 @@ def q_events_markov_pi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(t.select(F.col("dst").alias("s")))
         .distinct()
     )
+    edges = t.join(outs, "src")  # (src, dst, n, o)
     p = states.withColumn("p", F.lit(PI_SCALE).cast("long"))
+    term = F.expr("(p * n) div o")
     for _ in range(PI_ITERS):
-        contrib = (
-            t.join(outs, "src")
-            .join(p.withColumnRenamed("s", "src"), "src")
-            .select(
-                F.col("dst").alias("s"),
-                F.expr("(p * n) div o").alias("c"),
-            )
-            .groupBy("s")
-            .agg(F.sum("c").alias("c"))
-        )
-        p = states.join(contrib, "s", "left").select(
-            "s", F.coalesce("c", F.lit(0)).cast("long").alias("p")
-        )
+        p = propagate(edges, states, p, term, lambda c: c)
     return p.select(
         F.col("s").alias("event_type"), F.col("p").alias("pi_scaled")
     )

@@ -29,9 +29,10 @@ Cross-engine determinism rules (same discipline as queries_text.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from . import synth
+from .operators.propagate import propagate
 from .queries import cut, register, stage, views
 from .queries_text import _TOKENS_SQL_DUCK
 from .session import session_token
@@ -306,8 +307,13 @@ FROM r{PR_ITERS}
     return sql
 
 
-@register("host_pagerank", _pr_oracle())
-def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pagerank(
+    spark: SparkSession, sf_dir: str, seed: Column, iters: int
+) -> DataFrame:
+    """PageRank over the weighted host graph with the teleport mass on
+    the hosts where ``seed`` holds: they start at PR_SCALE and take the
+    (1-d) restart term each step, every other host starts at 0. An
+    always-true seed is plain PageRank (Catalyst folds the CASE away)."""
     views(spark, sf_dir)
 
     def build_edges() -> DataFrame:
@@ -319,7 +325,7 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         outw = w.groupBy("src").agg(F.sum("w").alias("ow"))
         return w.join(outw, "src")  # (src, dst, w, ow)
 
-    # materialized once per (session, sf): three iterations re-read the
+    # materialized once per (session, sf): the iterations re-read the
     # edge list, and without the stage boundary each would recompute the
     # pages->groupBy chain (at 10^12 pages the edge rollup is the
     # expensive pass; the iterations touch only the contracted graph)
@@ -329,25 +335,22 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(ew.select(F.col("dst").alias("h")))
         .distinct()
     )
-    r = hosts.withColumn("r", F.lit(PR_SCALE).cast("long"))
-    for _ in range(PR_ITERS):
-        contribs = (
-            ew.join(r.withColumnRenamed("h", "src"), "src")
-            .select(
-                F.col("dst").alias("h"),
-                F.expr("(850 * r * w) div (1000 * ow)").alias("c"),
-            )
-            .groupBy("h")
-            .agg(F.sum("c").alias("c"))
-        )
-        r = hosts.join(contribs, "h", "left").select(
-            "h", (F.lit(_PR_BASE) + F.coalesce("c", F.lit(0))).alias("r")
-        )
+    base = F.when(seed, F.lit(_PR_BASE)).otherwise(F.lit(0))
+    r = hosts.select(
+        "h", F.when(seed, F.lit(PR_SCALE)).otherwise(F.lit(0)).cast("long").alias("r")
+    )
+    term = F.expr("(850 * r * w) div (1000 * ow)")
+    for _ in range(iters):
+        r = propagate(ew, hosts, r, term, lambda c: base + c)
     return r.select(
-        F.concat(F.lit("h"), F.col("h").cast("string"), F.lit(".example.com"))
-        .alias("host"),
+        synth.host_name(F.col("h")).alias("host"),
         F.col("r").cast("long").alias("rank_scaled"),
     )
+
+
+@register("host_pagerank", _pr_oracle())
+def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _pagerank(spark, sf_dir, F.lit(True), PR_ITERS)
 
 
 # ----------------------------------------------------------------------
@@ -551,6 +554,22 @@ FROM lcanon
 )
 
 
+def link_tag_parts() -> tuple[Column, Column]:
+    """(url, anchor) of the column ``tag``, one whole LINK_TAG_RE match.
+
+    r6: the two per-tag group extractions re-ran LINK_TAG_RE over every
+    matched tag (measured 3.3 s vs 2.4 s for the whole build at sf1.0
+    volume). A matched tag is `<a href="URL">ANCHOR</a>` with no '"' in
+    URL and no '<' in ANCHOR, so the FIRST '"' at position >= 10 is the
+    closing quote (locate starts past the opening quote at position 9 —
+    a URL may legally begin with '>') and both groups fall out of plain
+    substring arithmetic. Exactly the regex groups, no regex per tag."""
+    cq = "locate('\">', tag, 10)"
+    raw_url = F.expr(f"substring(tag, 10, {cq} - 10)")
+    raw_anchor = F.expr(f"substring(tag, {cq} + 2, length(tag) - {cq} - 5)")
+    return raw_url, raw_anchor
+
+
 def _links_df(spark: SparkSession) -> DataFrame:
     """(page_id, src_host, pos, dst_url, anchor) — map-side only."""
     pat = LINK_TAG_RE
@@ -563,16 +582,7 @@ def _links_df(spark: SparkSession) -> DataFrame:
             )
         ).alias("pos", "tag"),
     )
-    # r6: the two per-tag group extractions re-ran LINK_TAG_RE over every
-    # matched tag (measured 3.3 s vs 2.4 s for the whole build at sf1.0
-    # volume). A matched tag is `<a href="URL">ANCHOR</a>` with no '"' in
-    # URL and no '<' in ANCHOR, so the FIRST '"' at position >= 10 is the
-    # closing quote (locate starts past the opening quote at position 9 —
-    # a URL may legally begin with '>') and both groups fall out of plain
-    # substring arithmetic. Exactly the regex groups, no regex per tag.
-    cq = "locate('\">', tag, 10)"
-    raw_url = F.expr(f"substring(tag, 10, {cq} - 10)")
-    raw_anchor = F.expr(f"substring(tag, {cq} + 2, length(tag) - {cq} - 5)")
+    raw_url, raw_anchor = link_tag_parts()
     return tags.select(
         "page_id",
         "src_host",
@@ -789,29 +799,16 @@ def q_host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(w.select(F.col("dst").alias("h")))
         .distinct()
     )
+    rev = w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     h = hosts.select("h", F.lit(HITS_SCALE).cast("long").alias("s"))
-    shift = 1 << HITS_SHIFT
+    term = F.col("s") * F.col("w")
+
+    def finish(c: Column) -> Column:
+        return F.call_function("div", c, F.lit(1 << HITS_SHIFT))
+
     for _ in range(HITS_ITERS):
-        contrib_a = w.join(h.withColumnRenamed("h", "src"), "src").select(
-            F.col("dst").alias("h"), (F.col("s") * F.col("w")).alias("c")
-        )
-        a = hosts.join(
-            contrib_a.groupBy("h").agg(
-                F.expr(f"CAST(sum(c) DIV {shift} AS BIGINT)").alias("s")
-            ),
-            "h",
-            "left",
-        ).select("h", F.coalesce("s", F.lit(0).cast("long")).alias("s"))
-        contrib_h = w.join(a.withColumnRenamed("h", "dst"), "dst").select(
-            F.col("src").alias("h"), (F.col("s") * F.col("w")).alias("c")
-        )
-        h = hosts.join(
-            contrib_h.groupBy("h").agg(
-                F.expr(f"CAST(sum(c) DIV {shift} AS BIGINT)").alias("s")
-            ),
-            "h",
-            "left",
-        ).select("h", F.coalesce("s", F.lit(0).cast("long")).alias("s"))
+        a = propagate(w, hosts, h, term, finish)  # authority: along edges
+        h = propagate(rev, hosts, a, term, finish)  # hub: against them
     return (
         hosts.join(a.withColumnRenamed("s", "auth_scaled"), "h")
         .join(h.withColumnRenamed("s", "hub_scaled"), "h")
@@ -1431,7 +1428,7 @@ def q_host_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PPR_PATH_RE = "^[A-Za-z]+://[^/?#]+([^?#]*)"
 
 
-def _ppr_oracle() -> str:
+def _path_prefix_oracle() -> str:
     legs = "\nUNION ALL\n".join(
         f"SELECT host, doc_id, regexp_extract(path, '^((/[^/]+){{{d}}})', 1)"
         " AS p FROM b"
@@ -1456,7 +1453,7 @@ FROM pref WHERE p <> '' GROUP BY 1, 2, 3
     )
 
 
-@register("path_prefix_rollup", _ppr_oracle())
+@register("path_prefix_rollup", _path_prefix_oracle())
 def q_path_prefix_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     views(spark, sf_dir)
     b = spark.table("pages").select(
@@ -1610,8 +1607,6 @@ GROUP BY 1
 
 @register("host_bfs_layers", _bfs_oracle())
 def q_host_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     views(spark, sf_dir)
     e = stage(
         spark,
@@ -1624,25 +1619,24 @@ def q_host_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     seeds = hosts.where(F.expr(_BFS_SEED_RULE.format(g0=", 0")))
-    visited = seeds.select(
-        "host", F.lit(0).cast("long").alias("depth")
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    visited = cut(seeds.select("host", F.lit(0).cast("long").alias("depth")))
     frontier = visited.select("host")
     d = 0
     while d < BFS_MAX_D:
-        nxt = (
+        nxt = cut(
             frontier.join(e, frontier.host == e.src_host)
             .select(F.col("dst_host").alias("host"))
             .distinct()
             .join(visited.select("host"), "host", "left_anti")
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
         )
         if nxt.isEmpty():
             break
         d += 1
-        visited = visited.unionByName(
-            nxt.select("host", F.lit(d).cast("long").alias("depth"))
-        ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        visited = cut(
+            visited.unionByName(
+                nxt.select("host", F.lit(d).cast("long").alias("depth"))
+            )
+        )
         frontier = nxt.select("host")
     return visited
 
@@ -1765,8 +1759,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     views(spark, sf_dir)
     labels = _lpa_labels(_lpa_edges(spark, sf_dir))
     return labels.select(
-        F.concat(F.lit("h"), F.col("h").cast("string"), F.lit(".example.com"))
-        .alias("host"),
+        synth.host_name(F.col("h")).alias("host"),
         F.col("lab").cast("long").alias("community"),
     )
 
@@ -1786,9 +1779,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: per round ONE hash join of the bounded (host, dist)
 # frontier table into the distinct edge list + a partial/final MIN agg
 # keyed by dst, unioned with the previous distances and re-minimized —
-# two bounded shuffles per round over contracting tables, DISK_ONLY
-# lineage cuts (the dedup_components discipline); no driver-side graph
-# state. The oracle unrolls the same K rounds as chained CTEs but
+# two bounded shuffles per round over contracting tables, a cut()
+# between rounds (the dedup_components discipline); no driver-side
+# graph state. The oracle unrolls the same K rounds as chained CTEs but
 # formulates each as a LEFT JOIN + LEAST over the FULL host set (a
 # dense-table formulation, not a frontier one).
 
@@ -1840,8 +1833,6 @@ WHERE dist < 9223372036854775807
 
 @register("host_sssp", _sssp_oracle())
 def q_host_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     views(spark, sf_dir)
 
     def build_weighted_edges() -> DataFrame:
@@ -1861,12 +1852,12 @@ def q_host_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(ew.select(F.col("dst").alias("h")))
         .distinct()
     )
-    dist = (
-        hosts.where(F.col("h") % _SSSP_SEED_MOD == 0)
-        .select("h", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    dist = hosts.where(F.col("h") % _SSSP_SEED_MOD == 0).select(
+        "h", F.lit(0).cast("long").alias("dist")
     )
-    for _ in range(SSSP_ROUNDS):
+    for i in range(SSSP_ROUNDS):
+        if i:
+            dist = cut(dist)
         relaxed = (
             ew.join(dist.withColumnRenamed("h", "src"), "src")
             .select(F.col("dst").alias("h"), (F.col("dist") + F.col("wgt")).alias("d"))
@@ -1876,11 +1867,9 @@ def q_host_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(relaxed)
             .groupBy("h")
             .agg(F.min("d").alias("dist"))
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
         )
     return dist.select(
-        F.concat(F.lit("h"), F.col("h").cast("string"), F.lit(".example.com"))
-        .alias("host"),
+        synth.host_name(F.col("h")).alias("host"),
         F.col("dist").cast("long").alias("dist"),
     )
 
@@ -1900,11 +1889,11 @@ def q_host_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQUARING — p <- p(p) — so a depth-d chain resolves in ceil(log2 d)
 # rounds of ONE self-equi-join each (no per-hop walk: a naive
 # follow-one-hop loop is O(d) rounds and at web scale redirect chains
-# hit hundreds of hops under canonicalization loops). Each round
-# localCheckpoints (lineage doubles per squaring). The corpus-scale
-# pass is ONE pid agg; the resolved pointer table joins back as a
-# broadcast. The oracle walks each chain one hop at a time with a
-# recursive CTE — the algorithm-independent formulation.
+# hit hundreds of hops under canonicalization loops). The pointer
+# table is cut() between rounds (lineage doubles per squaring). The
+# corpus-scale pass is ONE pid agg; the resolved pointer table joins
+# back as a broadcast. The oracle walks each chain one hop at a time
+# with a recursive CTE — the algorithm-independent formulation.
 
 REDIR_ROUNDS = 8  # 2^8 = 256 >= NP bounds the deepest chain
 
@@ -1936,8 +1925,6 @@ GROUP BY 1
 
 @register("redirect_resolve", _redirect_oracle())
 def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     views(spark, sf_dir)
     # pointer table over the full pid domain (tiny dim — NP rows): the
     # intermediate hops of a chain may be pids no page carries, so the
@@ -1948,13 +1935,11 @@ def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.greatest(F.lit(0), F.col("id") - 1 - (F.col("id") % 7)))
         .alias("v"),
     )
-    for _ in range(REDIR_ROUNDS):  # successive squaring: p <- p(p)
+    for i in range(REDIR_ROUNDS):  # successive squaring: p <- p(p)
+        if i:
+            ptr = cut(ptr)
         p2 = ptr.select(F.col("u").alias("m"), F.col("v").alias("w"))
-        ptr = (
-            ptr.join(p2, ptr.v == p2.m)
-            .select("u", F.col("w").alias("v"))
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        )
+        ptr = ptr.join(p2, ptr.v == p2.m).select("u", F.col("w").alias("v"))
     pa = (
         spark.table("pages")
         .groupBy("pid")
@@ -2095,7 +2080,7 @@ def neighbor_jaccard(und: DataFrame, dcap: int, cmin: int) -> DataFrame:
 # Scale shape: each peel round is ONE degree agg (partial/final) over a
 # SHRINKING edge list + a semi-join of edges against the kept-node set
 # (host-dim-sized, broadcast) — the same bounded-shuffle contraction
-# discipline as dedup_components; localCheckpoint cuts the per-round
+# discipline as dedup_components; a cut() between rounds stops the
 # lineage growth. Peeling is inherently O(cascade-depth) rounds; both
 # engine and oracle run exactly KCORE_ROUNDS rounds (the oracle unrolls
 # them as materialized CTEs), and tests/test_chain_jaccard.py asserts
@@ -2177,17 +2162,14 @@ def _strong_host_edges(spark: SparkSession, w: int) -> DataFrame:
     )
 
 
-def kcore_peel(
-    und: DataFrame, k: int, rounds: int, checkpoint: bool = True
-) -> DataFrame:
+def kcore_peel(und: DataFrame, k: int, rounds: int) -> DataFrame:
     """Peel `rounds` rounds of the k-core cascade; returns (host,
     core_deg) of the surviving subgraph. Fixpoint-within-rounds is
-    asserted in tests/test_chain_jaccard.py. checkpoint=False keeps the
-    per-round plan visible for the plan guard (production always cuts)."""
-    from pyspark import StorageLevel
-
+    asserted in tests/test_chain_jaccard.py."""
     edges = und
-    for _ in range(rounds):
+    for i in range(rounds):
+        if i:
+            edges = cut(edges)
         deg = (
             edges.select(F.explode(F.array("u", "v")).alias("h"))
             .groupBy("h")
@@ -2199,10 +2181,6 @@ def kcore_peel(
         ).join(
             F.broadcast(keep.withColumnRenamed("h", "v")), "v", "left_semi"
         )
-        if checkpoint:
-            edges = edges.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            )
     return (
         edges.select(F.explode(F.array("u", "v")).alias("host"))
         .groupBy("host")
@@ -2449,13 +2427,11 @@ def q_host_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 850/1000, floor division; seeds start at PR_SCALE, everything else
 # at 0, and the (1-d) restart term lands ONLY on seeds each step.
 #
-# Scale shape: identical to host_pagerank — the corpus contracts once
-# to the weighted edge list (staged, shared key with host_pagerank, so
-# a sweep running both pays the rollup once); each of the K iterations
-# is a hash join keyed by src plus a partial/final agg keyed by dst on
-# the HOST-bounded graph; the driver holds no state but the loop
-# counter. The oracle unrolls the same K steps as CTEs — formulation
-# shared, arithmetic exact, so the gate certifies every iteration.
+# Scale shape: host_pagerank's body (_pagerank) with a seed predicate
+# — the same staged edge list, so a sweep running both pays the rollup
+# once, and the same propagate() step per iteration. The oracle
+# unrolls the same K steps as CTEs — formulation shared, arithmetic
+# exact, so the gate certifies every iteration.
 
 PPR_SEED_MOD = 50
 PPR_ITERS = 3
@@ -2507,48 +2483,7 @@ FROM r{PPR_ITERS}
 
 @register("host_ppr", _ppr_oracle())
 def q_host_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    views(spark, sf_dir)
-
-    def build_edges() -> DataFrame:
-        links = spark.table("pages").select(
-            F.col("pid").alias("src"),
-            ((F.col("page_id") * 13 + 7) % synth.NP).alias("dst"),
-        )
-        w = links.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-        outw = w.groupBy("src").agg(F.sum("w").alias("ow"))
-        return w.join(outw, "src")
-
-    ew = stage(spark, (session_token(spark), sf_dir, "pr_edges"), build_edges)
-    hosts = (
-        ew.select(F.col("src").alias("h"))
-        .unionAll(ew.select(F.col("dst").alias("h")))
-        .distinct()
-    )
-    seed_r = F.when(
-        F.col("h") % PPR_SEED_MOD == 0, F.lit(PR_SCALE)
-    ).otherwise(F.lit(0))
-    seed_base = F.when(
-        F.col("h") % PPR_SEED_MOD == 0, F.lit(_PR_BASE)
-    ).otherwise(F.lit(0))
-    r = hosts.withColumn("r", seed_r.cast("long"))
-    for _ in range(PPR_ITERS):
-        contribs = (
-            ew.join(r.withColumnRenamed("h", "src"), "src")
-            .select(
-                F.col("dst").alias("h"),
-                F.expr("(850 * r * w) div (1000 * ow)").alias("c"),
-            )
-            .groupBy("h")
-            .agg(F.sum("c").alias("c"))
-        )
-        r = hosts.join(contribs, "h", "left").select(
-            "h", (seed_base + F.coalesce("c", F.lit(0))).alias("r")
-        )
-    return r.select(
-        F.concat(F.lit("h"), F.col("h").cast("string"), F.lit(".example.com"))
-        .alias("host"),
-        F.col("r").cast("long").alias("rank_scaled"),
-    )
+    return _pagerank(spark, sf_dir, F.col("h") % PPR_SEED_MOD == 0, PPR_ITERS)
 
 
 # ----------------------------------------------------------------------

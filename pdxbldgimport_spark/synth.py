@@ -35,6 +35,9 @@ rectangles through their corner scalars. Engine *operators* must use only
 """
 
 from __future__ import annotations
+
+from pyspark.sql import Column, functions as F
+
 from .session import session_token
 
 TABLES = [
@@ -621,6 +624,12 @@ def oracle_with(*names: str) -> str:
     dependent — the oracle reads the corner scalars directly)."""
     parts = [f"{n} AS ({render(n, 'duckdb')})" for n in names]
     return "WITH " + ",\n".join(parts) + "\n"
+
+
+def host_name(col: Column) -> Column:
+    """Host name of parcel id ``col`` — the Spark spelling of the
+    oracles' ``'h' || CAST(h AS VARCHAR) || '.example.com'``."""
+    return F.concat(F.lit("h"), col.cast("string"), F.lit(".example.com"))
 
 
 _REGISTERED: dict = {}

@@ -278,7 +278,7 @@ def test_kcore_peel_vs_bruteforce(spark, seed, p, k):
         pd.DataFrame(sorted(edges), columns=["u", "v"])
     ).repartition(4)
     got = (
-        kcore_peel(und, k, rounds + 1, checkpoint=False)
+        kcore_peel(und, k, rounds + 1)
         .toPandas()
         .set_index("host")["core_deg"]
         .to_dict()

@@ -1717,9 +1717,7 @@ def test_kcore_round_is_broadcast_semi_joins_no_python(spark):
     )
 
     views(spark, SF)
-    plan = _plan(
-        kcore_peel(_strong_host_edges(spark, KCORE_W), KCORE_K, 1, checkpoint=False)
-    )
+    plan = _plan(kcore_peel(_strong_host_edges(spark, KCORE_W), KCORE_K, 1))
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
     assert "SortMergeJoin" not in plan
     assert "Window" not in plan

@@ -16,7 +16,7 @@ from pdxbldgimport_spark.queries_crawl import (
     PII_PHONE,
     _pii_guarded_scrub,
 )
-from pdxbldgimport_spark.queries_web import LINK_TAG_RE
+from pdxbldgimport_spark.queries_web import LINK_TAG_RE, link_tag_parts
 
 
 @pytest.fixture(scope="module")
@@ -138,13 +138,8 @@ def test_tag_parse_equals_regex_groups(spark):
     rows = [(t,) for t in TAG_CASES]
     assert all(pat.fullmatch(t) for (t,) in rows), "fixture must match"
     df = spark.createDataFrame(rows, ["tag"])
-    cq = "locate('\">', tag, 10)"
-    got = df.select(
-        F.expr(f"substring(tag, 10, {cq} - 10)").alias("url"),
-        F.expr(f"substring(tag, {cq} + 2, length(tag) - {cq} - 5)").alias(
-            "anchor"
-        ),
-    ).collect()
+    url, anchor = link_tag_parts()
+    got = df.select(url.alias("url"), anchor.alias("anchor")).collect()
     for (t,), r in zip(rows, got):
         m = pat.fullmatch(t)
         assert r["url"] == m.group(1), t
