@@ -7,7 +7,7 @@ derivation in both engines).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from . import oracles_conflation as OC
 from . import synth
@@ -15,7 +15,7 @@ from .geo import cells as C
 from .operators import conflation as CF
 from .operators import geometry as G
 from .operators.pip_join import pip_join, tile_expr
-from .session import session_token
+from .session import evict_stopped_sessions, session_cache, session_token
 
 # ----------------------------------------------------------------------
 # registry plumbing
@@ -38,7 +38,7 @@ def views(spark: SparkSession, sf_dir: str) -> None:
     synth.register_views_cached(spark, sf_dir)
 
 
-_PREP_CACHE: dict = {}
+_PREP_CACHE = session_cache(0)
 
 
 def stage(spark: SparkSession, key: tuple, df_fn) -> DataFrame:
@@ -59,6 +59,7 @@ def stage(spark: SparkSession, key: tuple, df_fn) -> DataFrame:
     flat no matter how many stages a session materializes."""
     from pyspark import StorageLevel
 
+    evict_stopped_sessions(key[0])
     df = _PREP_CACHE.get(key)
     if df is None:
         df = df_fn().localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
@@ -77,6 +78,22 @@ def cut(df: DataFrame) -> DataFrame:
     from pyspark import StorageLevel
 
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+
+def cut_count(df: DataFrame, flag: Column) -> tuple[DataFrame, int]:
+    """``cut(df)`` plus the number of its rows where ``flag`` holds,
+    read from the checkpoint's own job through an ``Observation`` — the
+    count costs no extra Spark job. A fixed-round loop cuts its state
+    with this between rounds and stops at the first round that changed
+    nothing (``n == 0``, or kcore's edge count equal to the previous
+    round's). That early exit is exact only where a round is a
+    deterministic function of the state and fixed inputs: then a round
+    that changes nothing repeats forever. Callers test equality, never
+    a threshold, so a retried task that double-counts a changed row
+    cannot pass for a round that changed nothing."""
+    obs = Observation()
+    n = F.coalesce(F.sum(flag.cast("long")), F.lit(0)).alias("n")
+    return cut(df.observe(obs, n)), obs.get["n"]
 
 
 def prepared_footprints(spark: SparkSession, sf_dir: str) -> DataFrame:

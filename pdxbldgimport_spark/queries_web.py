@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from . import synth
 from .operators.propagate import propagate
-from .queries import cut, register, stage, views
+from .queries import cut, cut_count, register, stage, views
 from .queries_text import _TOKENS_SQL_DUCK
 from .session import session_token
 from .streaming.gate import gate, sentinel_dump
@@ -1623,13 +1623,14 @@ def q_host_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier = visited.select("host")
     d = 0
     while d < BFS_MAX_D:
-        nxt = cut(
+        nxt, n = cut_count(
             frontier.join(e, frontier.host == e.src_host)
             .select(F.col("dst_host").alias("host"))
             .distinct()
-            .join(visited.select("host"), "host", "left_anti")
+            .join(visited.select("host"), "host", "left_anti"),
+            F.lit(True),
         )
-        if nxt.isEmpty():
+        if n == 0:
             break
         d += 1
         visited = cut(
@@ -1766,22 +1767,24 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------------------------------
 # host_sssp: multi-source WEIGHTED shortest path over the host graph —
-# the weighted sibling of host_bfs_layers (hop-count BFS): K rounds of
-# Bellman-Ford min-plus relaxation from the same seed rule. Edge
-# weights are deterministic small ints (1 + (src+dst) % 7) over the
-# DISTINCT directed edge set, so distances are exact int64 and the
-# min-plus algebra is associative; SSSP_ROUNDS = 8 bounds the deepest
-# weighted path the gate certifies (strictly more rounds than the
-# graph's hop diameter, so the fixed-K result equals the fixpoint on
-# the synth graph — asserted by the brute-force pytest running
-# Dijkstra to convergence).
+# the weighted sibling of host_bfs_layers (hop-count BFS): Bellman-Ford
+# min-plus relaxation from the same seed rule, run to its fixpoint.
+# Edge weights are deterministic small ints (1 + (src+dst) % 7) over
+# the DISTINCT directed edge set, so distances are exact int64 and the
+# min-plus algebra is associative. SSSP_ROUNDS = 8 is the cap the
+# oracle unrolls (strictly more rounds than the graph's hop diameter,
+# so the K-round result equals the fixpoint on the synth graph —
+# asserted by the brute-force pytest running Dijkstra to convergence);
+# the engine stops earlier, at the first round that lowers no distance
+# and reaches no new host (the third round at sf0.01).
 #
 # Scale shape: per round ONE hash join of the bounded (host, dist)
 # frontier table into the distinct edge list + a partial/final MIN agg
 # keyed by dst, unioned with the previous distances and re-minimized —
-# two bounded shuffles per round over contracting tables, a cut()
-# between rounds (the dedup_components discipline); no driver-side
-# graph state. The oracle unrolls the same K rounds as chained CTEs but
+# two bounded shuffles per round over contracting tables, a
+# cut_count() between rounds (the dedup_components discipline) whose
+# one job also counts the changed distances; no driver-side graph
+# state. The oracle unrolls all K rounds as chained CTEs but
 # formulates each as a LEFT JOIN + LEAST over the FULL host set (a
 # dense-table formulation, not a frontier one).
 
@@ -1857,16 +1860,22 @@ def q_host_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for i in range(SSSP_ROUNDS):
         if i:
-            dist = cut(dist)
-        relaxed = (
-            ew.join(dist.withColumnRenamed("h", "src"), "src")
-            .select(F.col("dst").alias("h"), (F.col("dist") + F.col("wgt")).alias("d"))
+            dist, n = cut_count(
+                dist, F.col("old").isNull() | (F.col("dist") < F.col("old"))
+            )
+            if n == 0:
+                break
+        relaxed = ew.join(dist.select(F.col("h").alias("src"), "dist"), "src").select(
+            F.col("dst").alias("h"),
+            (F.col("dist") + F.col("wgt")).alias("d"),
+            F.lit(None).cast("long").alias("old"),
         )
+        # old: the host's distance before this round (null if unreached)
         dist = (
-            dist.select("h", F.col("dist").alias("d"))
+            dist.select("h", F.col("dist").alias("d"), F.col("dist").alias("old"))
             .unionByName(relaxed)
             .groupBy("h")
-            .agg(F.min("d").alias("dist"))
+            .agg(F.min("d").alias("dist"), F.min("old").alias("old"))
         )
     return dist.select(
         synth.host_name(F.col("h")).alias("host"),
@@ -1889,13 +1898,18 @@ def q_host_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQUARING — p <- p(p) — so a depth-d chain resolves in ceil(log2 d)
 # rounds of ONE self-equi-join each (no per-hop walk: a naive
 # follow-one-hop loop is O(d) rounds and at web scale redirect chains
-# hit hundreds of hops under canonicalization loops). The pointer
-# table is cut() between rounds (lineage doubles per squaring). The
-# corpus-scale pass is ONE pid agg; the resolved pointer table joins
-# back as a broadcast. The oracle walks each chain one hop at a time
-# with a recursive CTE — the algorithm-independent formulation.
+# hit hundreds of hops under canonicalization loops). REDIR_ROUNDS is
+# the cap; the engine stops at the first squaring that moves no
+# pointer (p(p) = p makes every later squaring the identity — at
+# sf0.01 the deepest chain has 3 hops and the third squaring moves
+# nothing). The
+# pointer table is cut_count() between rounds (lineage doubles per
+# squaring; the same job counts the moved pointers). The corpus-scale
+# pass is ONE pid agg; the resolved pointer table joins back as a
+# broadcast. The oracle walks each chain one hop at a time with a
+# recursive CTE — the algorithm-independent formulation.
 
-REDIR_ROUNDS = 8  # 2^8 = 256 >= NP bounds the deepest chain
+REDIR_ROUNDS = 8  # 2^8 = 256 >= NP: the cap, bounds the deepest chain
 
 
 def _redirect_oracle() -> str:
@@ -1937,9 +1951,13 @@ def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for i in range(REDIR_ROUNDS):  # successive squaring: p <- p(p)
         if i:
-            ptr = cut(ptr)
+            ptr, n = cut_count(ptr, F.col("v") != F.col("was"))
+            if n == 0:
+                break
         p2 = ptr.select(F.col("u").alias("m"), F.col("v").alias("w"))
-        ptr = ptr.join(p2, ptr.v == p2.m).select("u", F.col("w").alias("v"))
+        ptr = ptr.join(p2, ptr.v == p2.m).select(
+            "u", F.col("w").alias("v"), F.col("v").alias("was")
+        )
     pa = (
         spark.table("pages")
         .groupBy("pid")
@@ -2080,11 +2098,13 @@ def neighbor_jaccard(und: DataFrame, dcap: int, cmin: int) -> DataFrame:
 # Scale shape: each peel round is ONE degree agg (partial/final) over a
 # SHRINKING edge list + a semi-join of edges against the kept-node set
 # (host-dim-sized, broadcast) — the same bounded-shuffle contraction
-# discipline as dedup_components; a cut() between rounds stops the
-# lineage growth. Peeling is inherently O(cascade-depth) rounds; both
-# engine and oracle run exactly KCORE_ROUNDS rounds (the oracle unrolls
-# them as materialized CTEs), and tests/test_chain_jaccard.py asserts
-# the fixpoint lands within that budget at both SFs (depth 5 observed),
+# discipline as dedup_components; a cut_count() between rounds stops
+# the lineage growth and counts the surviving edges in the same job.
+# Peeling is inherently O(cascade-depth) rounds; the oracle unrolls
+# KCORE_ROUNDS rounds as materialized CTEs and the engine stops at the
+# fixpoint (the first round that keeps every edge), with KCORE_ROUNDS
+# as its cap. tests/test_chain_jaccard.py asserts the fixpoint lands
+# within that cap (5 rounds observed, the fifth keeping every edge),
 # so the bounded-round output IS the k-core, certified — not a
 # truncation.
 
@@ -2163,13 +2183,17 @@ def _strong_host_edges(spark: SparkSession, w: int) -> DataFrame:
 
 
 def kcore_peel(und: DataFrame, k: int, rounds: int) -> DataFrame:
-    """Peel `rounds` rounds of the k-core cascade; returns (host,
-    core_deg) of the surviving subgraph. Fixpoint-within-rounds is
-    asserted in tests/test_chain_jaccard.py."""
-    edges = und
+    """Peel the k-core cascade to its fixpoint, at most `rounds` rounds;
+    returns (host, core_deg) of the surviving subgraph. Fixpoint-within-
+    rounds is asserted in tests/test_chain_jaccard.py."""
+    edges, prev = und, None
     for i in range(rounds):
         if i:
-            edges = cut(edges)
+            # edges only shrink: an equal count is an equal edge set
+            edges, n = cut_count(edges, F.lit(True))
+            if n == prev:
+                break
+            prev = n
         deg = (
             edges.select(F.explode(F.array("u", "v")).alias("h"))
             .groupBy("h")

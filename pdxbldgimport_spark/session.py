@@ -46,6 +46,39 @@ def session_token(spark: SparkSession) -> str:
     return f"{sc.applicationId}@{sc.startTime}"
 
 
+# (cache, token_at, release) of every session_cache. One SparkContext
+# lives per process, so every token but the live one belongs to a
+# stopped session.
+_SESSION_CACHES: list = []
+_live_token: str | None = None
+
+
+def session_cache(token_at: int | None, release=None) -> dict:
+    """A module-level dict whose keys hold a session_token at index
+    ``token_at`` (``None``: the key is the token). The first
+    ``evict_stopped_sessions`` call under a new token drops the entries
+    of every other token, calling ``release(value)`` on each."""
+    cache: dict = {}
+    _SESSION_CACHES.append((cache, token_at, release))
+    return cache
+
+
+def evict_stopped_sessions(token: str) -> None:
+    """Mark ``token`` the live session. On the first call under a new
+    token, drop every session cache's entries of other tokens: a
+    stopped session's checkpoint handles and dumps, which would
+    otherwise stay until the process exits."""
+    global _live_token
+    if token == _live_token:
+        return
+    _live_token = token
+    for cache, at, release in _SESSION_CACHES:
+        for key in [k for k in cache if (k if at is None else k[at]) != token]:
+            value = cache.pop(key)
+            if release is not None:
+                release(value)
+
+
 def _external_master() -> bool:
     """True when a Spark master is already configured outside this
     factory. Under ``spark-submit`` the Python driver is launched by the

@@ -27,9 +27,12 @@ import tempfile
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..queries import cut
-from ..session import session_token
+from ..session import session_cache, session_token
 
-_DUMP_CACHE: dict = {}
+# dropped with their directory once another session is live
+_DUMP_CACHE = session_cache(
+    2, lambda src: shutil.rmtree(src.removesuffix("/*"), ignore_errors=True)
+)
 
 
 def sentinel_dump(

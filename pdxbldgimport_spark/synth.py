@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from .session import session_token
+from .session import evict_stopped_sessions, session_cache, session_token
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -632,7 +632,7 @@ def host_name(col: Column) -> Column:
     return F.concat(F.lit("h"), col.cast("string"), F.lit(".example.com"))
 
 
-_REGISTERED: dict = {}
+_REGISTERED = session_cache(None)
 
 
 def register_views_cached(spark, sf_dir: str) -> None:
@@ -641,6 +641,7 @@ def register_views_cached(spark, sf_dir: str) -> None:
     belong to a different sf_dir they must be re-registered (an
     alternating-SF caller would otherwise silently read the wrong scale)."""
     key = session_token(spark)
+    evict_stopped_sessions(key)
     if _REGISTERED.get(key) == sf_dir:
         return
     register_views(spark, sf_dir)

@@ -21,14 +21,20 @@ from tests.conftest import SF_SMOKE
 from tests.test_robust_graph import _duck_pages
 
 
+def _hop(u: int) -> int:
+    return u if u % 3 == 0 else max(0, u - 1 - u % 7)
+
+
 def _terminal(pid: int) -> int:
     cur = pid
     while cur % 3 != 0:
-        cur = max(0, cur - 1 - cur % 7)
+        cur = _hop(cur)
     return cur
 
 
-def test_redirect_resolve_matches_python_walk(spark):
+def _redirect_frames(spark, resolve):
+    """(engine, reference) redirect_resolve frames at the smoke SF; the
+    reference rolls the observed pids up by ``resolve(pid)``."""
     eng = (
         Q.QUERIES["redirect_resolve"](spark, SF_SMOKE)
         .toPandas()
@@ -38,7 +44,7 @@ def test_redirect_resolve_matches_python_walk(spark):
     pages = _duck_pages("pid")
     rows: dict[int, list[int]] = {}
     for pid, n in pages.pid.value_counts().items():
-        cell = rows.setdefault(_terminal(int(pid)), [0, 0])
+        cell = rows.setdefault(resolve(int(pid)), [0, 0])
         cell[0] += 1
         cell[1] += int(n)
     ref = (
@@ -51,14 +57,31 @@ def test_redirect_resolve_matches_python_walk(spark):
         .sort_values("term")
         .reset_index(drop=True)
     )
-    pd.testing.assert_frame_equal(
-        eng.astype("int64"), ref.astype("int64")
-    )
+    return eng.astype("int64"), ref.astype("int64"), pages
+
+
+def test_redirect_resolve_matches_python_walk(spark):
+    eng, ref, pages = _redirect_frames(spark, _terminal)
+    pd.testing.assert_frame_equal(eng, ref)
     # the squaring loop must actually contract multi-hop chains: some
     # observed pid must sit >= 2 hops from its terminal
     assert any(
         pid % 3 != 0 and (pid - 1 - pid % 7) % 3 != 0
         for pid in pages.pid.unique()
+    )
+
+
+def test_redirect_resolve_one_round_cap_matches_square(spark, monkeypatch):
+    """A cap that binds: with REDIR_ROUNDS = 1 the engine runs its one
+    uncut squaring, so every pid resolves to p(p(pid)) — short of the
+    terminal for some observed pid."""
+    from pdxbldgimport_spark import queries_web
+
+    monkeypatch.setattr(queries_web, "REDIR_ROUNDS", 1)
+    eng, ref, pages = _redirect_frames(spark, lambda u: _hop(_hop(u)))
+    pd.testing.assert_frame_equal(eng, ref)
+    assert any(
+        _hop(_hop(int(pid))) != _terminal(int(pid)) for pid in pages.pid.unique()
     )
 
 
@@ -287,10 +310,12 @@ def test_kcore_peel_vs_bruteforce(spark, seed, p, k):
 
 
 def test_host_kcore_fixpoint_within_round_budget(spark):
-    """The bounded-round output IS the k-core: one extra peel round
-    changes nothing at the smoke SF (the gate SF shares the saturated
-    250-host graph, so this certifies the oracle's unroll depth too),
-    and the cascade is live (strictly between 0 and all hosts)."""
+    """The bounded-round output IS the k-core: kcore_peel at the
+    KCORE_ROUNDS cap equals the Python peel run to its fixpoint on the
+    smoke graph (the gate SF shares the saturated 250-host graph, so
+    this certifies the oracle's unroll depth too), the fixpoint round is
+    reached inside the cap with a round to spare for the engine to see
+    it, and the cascade is live (strictly between 0 and all hosts)."""
     from pdxbldgimport_spark.queries_web import (
         KCORE_K,
         KCORE_ROUNDS,
@@ -303,25 +328,20 @@ def test_host_kcore_fixpoint_within_round_budget(spark):
     views(spark, SF_SMOKE)
     und = _strong_host_edges(spark, KCORE_W).cache()
     try:
-        a = (
+        edges = {(r.u, r.v) for r in und.collect()}
+        ref, rounds = _py_kcore(edges, KCORE_K)
+        got = (
             kcore_peel(und, KCORE_K, KCORE_ROUNDS)
             .toPandas()
-            .sort_values("host")
-            .reset_index(drop=True)
+            .set_index("host")["core_deg"]
+            .to_dict()
         )
-        b = (
-            kcore_peel(und, KCORE_K, KCORE_ROUNDS + 1)
-            .toPandas()
-            .sort_values("host")
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(a, b)
-        n_hosts = und.select(
-            F.explode(F.array("u", "v")).alias("h")
-        ).distinct().count()
-        assert 0 < len(a) < n_hosts
     finally:
         und.unpersist()
+    assert got == ref
+    assert rounds < KCORE_ROUNDS
+    n_hosts = len({h for e in edges for h in e})
+    assert 0 < len(ref) < n_hosts
 
 
 def test_idle_customers_matches_pandas(spark):

@@ -17,16 +17,13 @@ from tests.conftest import SF_SMOKE
 from tests.test_robust_graph import _duck_pages
 
 
-def test_host_sssp_matches_dijkstra_fixpoint(spark):
+def _sssp_graph():
+    """(adjacency src -> [(dst, weight)], seed distances) of
+    the smoke SF's distinct weighted edge list, derived from the pages
+    rows."""
     from pdxbldgimport_spark.queries_web import _SSSP_SEED_MOD
     from pdxbldgimport_spark.synth import NP
 
-    eng = (
-        Q.QUERIES["host_sssp"](spark, SF_SMOKE)
-        .toPandas()
-        .sort_values("host")
-        .reset_index(drop=True)
-    )
     pages = _duck_pages("pid, page_id")
     edges = {
         (int(p), int((g * 13 + 7) % NP))
@@ -38,8 +35,35 @@ def test_host_sssp_matches_dijkstra_fixpoint(spark):
         adj.setdefault(s, []).append((d, 1 + (s + d) % 7))
         nodes.add(s)
         nodes.add(d)
+    return adj, {h: 0 for h in nodes if h % _SSSP_SEED_MOD == 0}
+
+
+def _sssp_frame(dist: dict) -> pd.DataFrame:
+    return (
+        pd.DataFrame(
+            {
+                "host": [f"h{h}.example.com" for h in dist],
+                "dist": list(dist.values()),
+            }
+        )
+        .sort_values("host")
+        .reset_index(drop=True)
+    )
+
+
+def _engine_sssp(spark) -> pd.DataFrame:
+    return (
+        Q.QUERIES["host_sssp"](spark, SF_SMOKE)
+        .toPandas()
+        .sort_values("host")
+        .reset_index(drop=True)
+    )
+
+
+def test_host_sssp_matches_dijkstra_fixpoint(spark):
+    eng = _engine_sssp(spark)
+    adj, dist = _sssp_graph()
     # Dijkstra to convergence (no round bound) from all seeds
-    dist = {h: 0 for h in nodes if h % _SSSP_SEED_MOD == 0}
     pq = [(0, h) for h in dist]
     heapq.heapify(pq)
     while pq:
@@ -51,22 +75,37 @@ def test_host_sssp_matches_dijkstra_fixpoint(spark):
             if nd < dist.get(v, math.inf):
                 dist[v] = nd
                 heapq.heappush(pq, (nd, v))
-    ref = (
-        pd.DataFrame(
-            {
-                "host": [f"h{h}.example.com" for h in dist],
-                "dist": list(dist.values()),
-            }
-        )
-        .sort_values("host")
-        .reset_index(drop=True)
-    )
+    ref = _sssp_frame(dist)
     assert len(eng) == len(ref)
     m = eng.merge(ref, on="host", suffixes=("_e", "_r"))
     assert (m.dist_e.astype("int64") == m.dist_r.astype("int64")).all()
     # the weighted metric is non-trivial: some host is farther than its
     # hop count (weight > 1 on the shortest path)
     assert (m.dist_e > 1).any()
+
+
+def test_host_sssp_one_round_cap_matches_bellman_ford(spark, monkeypatch):
+    """A cap that binds: with SSSP_ROUNDS = 1 the engine runs its one
+    uncut round, which must equal one Python Bellman-Ford relaxation
+    from the seeds — short of the fixpoint."""
+    from pdxbldgimport_spark import queries_web
+
+    monkeypatch.setattr(queries_web, "SSSP_ROUNDS", 1)
+    eng = _engine_sssp(spark)
+    adj, seeds = _sssp_graph()
+
+    def relax(dist: dict) -> dict:
+        out = dict(dist)
+        for s, ds in dist.items():
+            for v, w in adj.get(s, []):
+                out[v] = min(out.get(v, ds + w), ds + w)
+        return out
+
+    one = relax(seeds)
+    assert relax(one) != one  # one round is short of the fixpoint
+    pd.testing.assert_frame_equal(
+        eng.astype({"dist": "int64"}), _sssp_frame(one).astype({"dist": "int64"})
+    )
 
 
 def _events(cols=("user_id", "ts", "event_type")) -> pd.DataFrame:

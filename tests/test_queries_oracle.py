@@ -41,6 +41,31 @@ def test_views_follow_sf_dir_within_one_session(spark):
     assert a == c and b != a, (a, b, c)
 
 
+def test_views_drop_a_stopped_sessions_cache_entries(spark, monkeypatch, tmp_path):
+    """The session caches keep only the live session's entries: entries
+    planted under another token, as left by a stopped session, are
+    dropped by the first views() call of this one (the gate dump's
+    directory with them), and this session's entries stay."""
+    from pdxbldgimport_spark import queries, session, synth
+    from pdxbldgimport_spark.streaming import gate
+
+    queries.views(spark, SF_SMOKE)
+    live = session.session_token(spark)
+    dead = "app-dead@0"
+    dump = tmp_path / "dump"
+    dump.mkdir()
+    queries._PREP_CACHE[(dead, SF_SMOKE, "footprints")] = object()
+    synth._REGISTERED[dead] = SF_SMOKE
+    gate._DUMP_CACHE[("events", ("user_id",), dead, SF_SMOKE)] = f"{dump}/*"
+    monkeypatch.setattr(session, "_live_token", dead)
+
+    queries.views(spark, SF_SMOKE)
+    assert all(k[0] != dead for k in queries._PREP_CACHE)
+    assert dead not in synth._REGISTERED and synth._REGISTERED[live] == SF_SMOKE
+    assert all(k[2] != dead for k in gate._DUMP_CACHE)
+    assert not dump.exists()
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
